@@ -482,6 +482,95 @@ def test_hot_cache_refresh_job_budget(spark, tmp_path_factory):
         sc.setJobGroup("", "")
 
 
+def test_hot_cache_concurrent_queries_and_puts(spark, tmp_path_factory, monkeypatch):
+    """Threaded facades share one engine. The store append (Spark
+    re-caches plans reading the path) and the hot-tier refresh both drop
+    the pinned window's blocks, so a put waits for in-flight queries;
+    queries racing puts neither fail nor differ from the serial answers."""
+    import sys
+    import threading
+
+    import timely_spark.api as api
+
+    store = str(tmp_path_factory.mktemp("engine_hot_threads") / "m")
+    eng = TimelyEngine(spark, store_path=store)
+    eng.put_lines([f"put m {B + i * 60_000} {float(i)} host=h{i % 3}" for i in range(240)])
+    eng.enable_hot_cache(window_ms=3_600_000)
+
+    def req(metric, agg):
+        return {"start": B - 1000, "end": B + 400 * 60_000, "msResolution": True,
+                "queries": [{"aggregator": agg, "metric": metric,
+                             "downsample": f"10m-{agg}", "tags": {"host": "*"}}]}
+
+    reqs = [req("m", "sum"), req("m", "max"), req("m", "avg")]
+    serial = [eng.query(r) for r in reqs]
+
+    def put(batch):
+        ts0 = B + (240 + batch * 10) * 60_000
+        eng.put_lines([f"put live {ts0 + i * 60_000} {float(i)} host=h1" for i in range(10)])
+
+    # a put waits while a query sits between planning and collecting
+    planned, release = threading.Event(), threading.Event()
+    shape = api.to_query_response
+
+    def held_shape(*a, **kw):
+        planned.set()
+        release.wait(60)
+        return shape(*a, **kw)
+
+    monkeypatch.setattr(api, "to_query_response", held_shape)
+    got = []
+    held = threading.Thread(target=lambda: got.append(eng.query(reqs[0])))
+    held.start()
+    assert planned.wait(60)
+    writer = threading.Thread(target=put, args=(0,))
+    writer.start()
+    writer.join(timeout=5)
+    waited = writer.is_alive()
+    release.set()
+    held.join(timeout=120)
+    writer.join(timeout=120)
+    monkeypatch.setattr(api, "to_query_response", shape)
+    assert waited and got == [serial[0]] and not writer.is_alive()
+
+    # more readers than cores against one writer: no failure, serial answers
+    outcomes, done = [], threading.Event()
+
+    def reader(k):
+        n = 0
+        while n < 3 or not done.is_set():
+            i = (k + n) % len(reqs)
+            n += 1
+            try:
+                outcomes.append(eng.query(reqs[i]) == serial[i])
+            except Exception as e:  # noqa: BLE001 (asserted below)
+                outcomes.append(repr(e))
+
+    def writer_loop():
+        try:
+            for batch in range(1, 5):
+                put(batch)
+        finally:
+            done.set()
+
+    threads = [threading.Thread(target=reader, args=(k,)) for k in range(6)]
+    threads.append(threading.Thread(target=writer_loop))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert set(outcomes) == {True}
+    live = req("live", "sum")
+    assert eng.query(live) == TimelyEngine(spark, store_path=store).query(live)
+    assert sum(v for s in eng.query(live) for v in s["dps"].values()) == 5 * 45.0
+
+
 # Multi-round-green, plan-stable rows explicitly rotated out of the
 # driver-checked prefix (r5): each was green in r2+r3+r4 with an
 # unchanged plan, and the committed full-sweep artifact

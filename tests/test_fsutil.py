@@ -1,19 +1,13 @@
-"""Driver-side sidecar I/O (timely_spark.fsutil) — the r12 replacement
-for one-row-parquet model sidecars.
+"""Driver-side sidecar I/O (timely_spark.fsutil) — the one sidecar
+format of every persisted artifact.
 
-The contract every persistent index (IvfPq / Decon / MinHash) and the
-hot-cache archive rely on: a dict of parameters round-trips byte-exactly
-through the Hadoop FileSystem API (doubles via shortest-repr JSON),
-missing files read as None, and delete retires a stale directory layout.
+The contract every persistent index (IvfPq / Decon / MinHash), the
+store layout and the hot-cache archive rely on: a dict of parameters
+round-trips byte-exactly through the Hadoop FileSystem API (doubles via
+shortest-repr JSON) and missing files read as None.
 """
 
-import os
-
-from timely_spark.fsutil import (
-    sidecar_delete,
-    sidecar_read_json,
-    sidecar_write_json,
-)
+from timely_spark.fsutil import sidecar_read_json, sidecar_write_json
 
 
 def test_sidecar_json_roundtrip_exact(spark, tmp_path):
@@ -42,15 +36,3 @@ def test_sidecar_overwrite_and_missing(spark, tmp_path):
     sidecar_write_json(spark, path, {"v": 1})
     sidecar_write_json(spark, path, {"v": 2})  # overwrite, not append
     assert sidecar_read_json(spark, path) == {"v": 2}
-
-
-def test_sidecar_delete_retires_directory_layout(spark, tmp_path):
-    # writers call sidecar_delete on the pre-r12 one-row-parquet DIR so
-    # the two layouts can never disagree after an overwrite
-    stale = tmp_path / "model"
-    stale.mkdir()
-    (stale / "part-00000.parquet").write_bytes(b"x")
-    sidecar_delete(spark, str(stale))
-    assert not os.path.exists(str(stale))
-    # deleting a non-existent path is a no-op, not an error
-    sidecar_delete(spark, str(stale))

@@ -626,8 +626,12 @@ def test_refresh_rollup_incremental_equals_full(spark, tmp_path):
     pl = spark.createDataFrame(late, "metric string, ts long, value double")
     path = str(tmp_path / "rollup_1m")
     write_rollup(rollup_partials(pb, 60_000), path)
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(mode_key)
     n_days = refresh_rollup(spark, path, pl, 60_000)
     assert n_days == 1  # late batch touches only day 1
+    # the partition replace is per-writer: session conf untouched
+    assert spark.conf.get(mode_key) == mode
     got = sorted(map(tuple,
         spark.read.parquet(path).drop("dt")
         .select("metric", "bucket_ts", "n", "vsum", "vmin", "vmax").collect()))

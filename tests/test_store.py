@@ -125,6 +125,43 @@ def test_compact_meta_folds_deltas(spark, tmp_path):
     assert folded[0]["last_seen"] == b + 2000  # max last_seen survives
 
 
+def test_layout_and_compaction_on_file_uri(spark, tmp_path):
+    """A store named by a ``file://`` URI keeps its layout sidecar and
+    compacts in place: sidecars and swaps go through the Hadoop FS that
+    owns the path, never a driver-local ``open`` or ``shutil``."""
+    from timely_spark.operators.meta import build_meta
+    from timely_spark.sources.store import (
+        compact_meta, compact_meta_with_cutoff, compact_partitions, read_layout,
+    )
+
+    store, meta_path = tmp_path.as_uri() + "/m", tmp_path.as_uri() + "/meta"
+    b = 1_447_767_913_000
+    for batch in range(3):
+        lines = [f"put m{m} {b + batch * 1000 + i} 1.0 host=h1" for m in range(3) for i in range(5)]
+        pts = parse_lines_df(spark.createDataFrame([(l,) for l in lines], ["value"]))
+        write_points(pts, store, bucket_metrics=4)
+        build_meta(pts).write.mode("append").parquet(meta_path)
+    assert read_layout(store) == {"bucket_metrics": 4}
+
+    def rows():
+        return sorted(read_points(spark, store).collect(), key=lambda r: (r["metric"], r["ts"]))
+
+    def n_files(d):
+        return sum(f.endswith(".parquet") for _, _, fs in os.walk(tmp_path / d) for f in fs)
+
+    before, n_buckets = rows(), len({r["metric_bucket"] for r in rows()})
+    assert n_files("m") > n_buckets
+    compact_partitions(spark, store)
+    assert rows() == before and n_files("m") == n_buckets
+    assert read_layout(store) == {"bucket_metrics": 4}
+
+    folded = sorted(compact_meta(spark, meta_path).collect())
+    compact_meta_with_cutoff(spark, meta_path, now_ms=b + 2000)
+    assert sorted(spark.read.parquet(meta_path).collect()) == folded
+    assert n_files("meta") == 1
+    assert sorted(os.listdir(tmp_path)) == ["m", "meta"]  # no tmp/old left
+
+
 def test_corrupt_lines_side_output(spark):
     lines = spark.createDataFrame(
         [("put m 1447767913000 1.0 a=b",), ("garbage",), ("put m xx 1.0",)], ["value"]

@@ -1237,10 +1237,14 @@ def test_streaming_history_dedup_incremental_index(spark, tmp_path):
         [(r["doc_id"], r["text"]) for r in batches[2]],
         "doc_id long, text string",
     )
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(mode_key)
     register_screen_batch(
         replay, 2, index_path=idx, out_path=out, threshold=0.5,
         num_hashes=64, bands=32,
     )
+    # the batch's partition replace is per-writer: session conf untouched
+    assert spark.conf.get(mode_key) == mode
     assert _counts() == before
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == shipped
 

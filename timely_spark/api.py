@@ -13,6 +13,8 @@ classes under common/src/main/java/timely/api/request/.
 from __future__ import annotations
 
 import json
+import threading
+from contextlib import contextmanager
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +46,43 @@ class _AllAuths:
 
 
 ALL_AUTHS = _AllAuths()
+
+
+class _ReadWriteLock:
+    """Shared readers or one exclusive writer. A waiting writer holds off
+    new readers, so a steady query stream cannot starve puts. Not
+    reentrant."""
+
+    def __init__(self):
+        self._cond = threading.Condition()
+        self._write = threading.Lock()
+        self._readers = self._writers = 0  # writers: waiting or writing
+
+    @contextmanager
+    def reading(self):
+        with self._cond:
+            self._cond.wait_for(lambda: not self._writers)
+            self._readers += 1
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._readers -= 1
+                self._cond.notify_all()
+
+    @contextmanager
+    def writing(self):
+        with self._cond:
+            self._writers += 1
+        try:
+            with self._write:
+                with self._cond:
+                    self._cond.wait_for(lambda: not self._readers)
+                yield
+        finally:
+            with self._cond:
+                self._writers -= 1
+                self._cond.notify_all()
 
 
 class NoMatchingTagsError(ValueError):
@@ -115,6 +154,11 @@ class TimelyEngine:
                 )
         self.bucket_metrics = bucket_metrics
         self._hot = None  # optional recent-window tier (enable_hot_cache)
+        # queries hold this shared while they plan and collect; the put
+        # write and hot-tier swaps hold it exclusively: the store append
+        # (Spark re-caches plans reading the path) and HotCache.refresh
+        # both drop pinned blocks a running query may be fetching
+        self._rw = _ReadWriteLock()
         # distinct viz-expression catalog (sidecar of the meta side-write):
         # queries evaluate visibility against this driver-cached set instead
         # of a per-query distinct scan over the point store
@@ -178,7 +222,9 @@ class TimelyEngine:
             F.count(F.lit(1)).alias("n"), F.max("ts").alias("hi")
         ).collect()[0]
         n = stats["n"]
-        if n:
+        if not n:
+            return n
+        with self._rw.writing():
             if self.series_table is not None:
                 from .sources.store import write_points_bucketed
 
@@ -231,9 +277,10 @@ class TimelyEngine:
         engine's hybrid reads without replaying ingest. An already
         attached/enabled cache is closed first so its pinned DataFrame
         does not linger in executor memory for the session lifetime."""
-        if getattr(self, "_hot", None) is not None and self._hot is not cache:
-            self._hot.close()
-        self._hot = cache
+        with self._rw.writing():
+            if self._hot is not None and self._hot is not cache:
+                self._hot.close()
+            self._hot = cache
 
     # -------------------------------------------------------------- reads
 
@@ -559,13 +606,14 @@ class TimelyEngine:
         )
 
     def _run(self, req: QueryRequest, auths, strict: bool = False) -> list[dict]:
-        results = self._frames(req, auths)
         out: list[dict] = []
-        for q, r in zip(req.queries, results):
-            part = to_query_response(r, ms_resolution=req.ms_resolution)
-            if strict and not part and not self._catalog_has_tags(q):
-                raise NoMatchingTagsError("No matching tags")
-            out.extend(part)
+        with self._rw.reading():
+            results = self._frames(req, auths)
+            for q, r in zip(req.queries, results):
+                part = to_query_response(r, ms_resolution=req.ms_resolution)
+                if strict and not part and not self._catalog_has_tags(q):
+                    raise NoMatchingTagsError("No matching tags")
+                out.extend(part)
         return out
 
     def suggest(self, q: str, kind: str = "metrics", max_results: int = 25,
@@ -601,7 +649,8 @@ class TimelyEngine:
         ts + metric names currently stored. With the hot tier enabled this
         reports the cached window, like the reference."""
         if self._hot is not None:
-            return self._hot.status()
+            with self._rw.reading():
+                return self._hot.status()
         agg = self.points().agg(
             F.min("ts").alias("oldest"), F.max("ts").alias("newest")
         ).collect()[0]

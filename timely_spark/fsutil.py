@@ -1,30 +1,27 @@
-"""Driver-side sidecar I/O through the Hadoop FileSystem API.
+"""How a persisted artifact is written, read and replaced.
 
-r12 optimization (guide §5: the driver should do almost no data work —
-and symmetrically, Spark should do no DRIVER-SIZED work): every
-persistent-index model sidecar and cache-archive metadata record is ONE
-row of parameters, yet writing it as a one-row parquet table costs a
-full Spark job (plan + schedule + commit protocol) and reading it back
-costs another. Measured on the shared host: 1.5-7 s per one-row write
-depending on load — pure fixed overhead multiplied across every
-index save/load AND every streaming micro-batch (the history-dedup loop
-re-read its model sidecar per batch).
+Every durable artifact (point store, meta catalog, persistent indexes,
+hot-cache archive, rollup tiers) is Parquet tables from the Spark writer
+plus, where it needs parameters, ONE JSON sidecar. This module owns the
+driver-side rest of that layout; no other module re-implements it:
 
-Writing the sidecar as a JSON FILE via the Hadoop FileSystem API keeps
-the exact property the Spark writer was chosen for — the bytes land on
-whatever filesystem owns the path (file://, hdfs://, s3a://) with that
-FS's semantics — while costing zero Spark jobs on either side.
-``json.dumps`` emits shortest-round-trip reprs, so doubles (codebooks,
-centroids, thresholds) survive byte-exactly.
-
-Readers fall back to the pre-r12 one-row-parquet layout so an index
-saved by older code still loads; writers drop a stale parquet sidecar
-dir at the same path so the two layouts can never disagree.
+- **Sidecars are JSON files through the Hadoop FileSystem API**: they
+  land on whatever filesystem owns the path (file://, hdfs://, s3a://)
+  at zero Spark jobs (a one-row Parquet sidecar cost a job per write and
+  per read, 1.5-7 s on a shared host). ``json.dumps`` emits
+  shortest-round-trip reprs, so doubles survive byte-exactly.
+- **A rewrite swaps in one recoverable order** (:func:`rewrite_in_place`):
+  the new table is written to ``<path>__compacting``; then current ->
+  ``<path>__old``, compacted -> current, delete ``__old``. A crash
+  between the renames leaves the previous data parked at ``__old``, not
+  deleted. Readers between the renames see a missing table, so rewrites
+  are maintenance jobs, never inline with queries.
 """
 
 from __future__ import annotations
 
 import json
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -34,6 +31,13 @@ def _fs_path(spark: SparkSession, path: str):
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, p
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists on the filesystem that owns it (a
+    driver-local ``os.path`` probe is always false for a URI)."""
+    fs, p = _fs_path(spark, path)
+    return bool(fs.exists(p))
 
 
 def sidecar_write_json(spark: SparkSession, path: str, obj: dict) -> None:
@@ -63,8 +67,21 @@ def sidecar_read_json(spark: SparkSession, path: str) -> dict | None:
     return json.loads(data)
 
 
-def sidecar_delete(spark: SparkSession, path: str) -> None:
-    """Recursively delete a stale sidecar path (used by writers to
-    retire the pre-r12 one-row-parquet layout on overwrite)."""
-    fs, p = _fs_path(spark, path)
-    fs.delete(p, True)
+def rewrite_in_place(
+    spark: SparkSession, path: str, write: Callable[[str], None]
+) -> None:
+    """Replace the table at ``path`` with what ``write(tmp)`` writes to
+    ``tmp``, swapping in the recoverable order of the module docstring.
+    ``write`` may read ``path``: nothing there moves until it returns."""
+    path = path.rstrip("/")
+    tmp, old = path + "__compacting", path + "__old"
+    write(tmp)
+    fs, cur = _fs_path(spark, path)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    old_p = jpath(old)
+    fs.delete(old_p, True)  # stale leftover from a crashed prior swap
+    if not fs.rename(cur, old_p):
+        raise IOError(f"rewrite: could not move {path} aside")
+    if not fs.rename(jpath(tmp), cur):
+        raise IOError(f"rewrite: swap failed; previous table preserved at {old}")
+    fs.delete(old_p, True)

@@ -9,8 +9,8 @@ run. This module gives the FAISS-IVFADC-shaped index (the composition
 
 - ``IvfPqIndex.build(corpus, ...)``  — train + encode (one Arrow pass),
 - ``idx.save(path)``                 — codes as a Parquet TABLE via the
-  Spark writer (shared-filesystem safe: hdfs://, s3a://) + a one-row
-  model sidecar carrying codebooks/centroids/params — exactly the
+  Spark writer (shared-filesystem safe: hdfs://, s3a://) + a JSON
+  ``model.json`` sidecar carrying codebooks/centroids/params — exactly the
   archive/restore pattern ``sources/hot_cache.py`` established for S10,
 - ``IvfPqIndex.load(spark, path)``   — re-open in a fresh session; query
   time no longer includes the build,
@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fsutil import rewrite_in_place, sidecar_read_json, sidecar_write_json
 from .similarity import per_query_topk, pq_train_codebooks
 
 
@@ -52,30 +53,24 @@ def _compact_table(spark: SparkSession, path: str, rows_per_file: int) -> None:
     small-file repair for append-heavy indexes (every ``append(path)``
     lands one file set; a year of daily increments is ~365 tiny files
     per table, the store-probe small-file cliff measured in SCALE.md).
-    Maintenance job, never inline with queries (readers between the
-    swap renames see a missing table).
-
-    Swap goes through the Hadoop FileSystem API (shared-FS safe) in a
-    RECOVERABLE order: current -> ``__old``, compacted tmp -> current,
-    delete ``__old`` — a crash mid-swap leaves the data in ``__old``
-    instead of deleted (delete-first would not)."""
+    Maintenance job, never inline with queries; the swap is
+    ``fsutil.rewrite_in_place``'s recoverable order."""
     df = spark.read.parquet(path)
     n = max(1, -(-df.count() // rows_per_file))
-    tmp = path.rstrip("/") + "__compacting"
-    df.repartition(n).write.mode("overwrite").parquet(tmp)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    cur, tmp_p = hpath(path), hpath(tmp)
-    old = hpath(path.rstrip("/") + "__old")
-    fs = cur.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(old, True)  # stale leftover from a crashed prior swap
-    if not fs.rename(cur, old):
-        raise IOError(f"compact: could not move {path} aside")
-    if not fs.rename(tmp_p, cur):
-        raise IOError(
-            f"compact: swap failed; previous table preserved at {old}"
-        )
-    fs.delete(old, True)
+    rewrite_in_place(
+        spark,
+        path,
+        lambda tmp: df.repartition(n).write.mode("overwrite").parquet(tmp),
+    )
+
+
+def _read_model(spark: SparkSession, path: str) -> dict:
+    """The index's ``model.json`` sidecar; a missing one means there is
+    no saved index at ``path``."""
+    row = sidecar_read_json(spark, path + "/model.json")
+    if row is None:
+        raise FileNotFoundError(f"no saved index at {path} (no model.json)")
+    return row
 
 
 def _encode_cells_codes(
@@ -194,13 +189,7 @@ class IvfPqIndex:
 
     def save(self, path: str) -> None:
         """Codes -> ``path/codes`` (Parquet, overwrite); model ->
-        ``path/model.json`` (driver-side JSON sidecar through the
-        Hadoop FS API — r12: the one-row-parquet sidecar cost a full
-        Spark job on each side of the lifecycle for a handful of
-        parameters; the JSON file keeps the same shared-FS semantics
-        at zero jobs, see ``fsutil``)."""
-        from ..fsutil import sidecar_delete, sidecar_write_json
-
+        ``path/model.json`` (the ``fsutil`` JSON sidecar)."""
         self.codes.write.mode("overwrite").parquet(path + "/codes")
         sidecar_write_json(
             self.spark,
@@ -218,21 +207,15 @@ class IvfPqIndex:
                 "centroids": [list(map(float, c)) for c in self.centroids],
             },
         )
-        sidecar_delete(self.spark, path + "/model")  # pre-r12 layout
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "IvfPqIndex":
         """Re-open a saved index: the codes table stays a lazy Parquet
         scan (corpus-sized data never touches the driver); the model
-        sidecar is a driver-side JSON read (pre-r12 one-row-parquet
-        sidecars still load via the fallback)."""
+        sidecar is a driver-side JSON read."""
         import numpy as np
 
-        from ..fsutil import sidecar_read_json
-
-        row = sidecar_read_json(spark, path + "/model.json")
-        if row is None:  # pre-r12 layout
-            row = spark.read.parquet(path + "/model").collect()[0]
+        row = _read_model(spark, path)
         books = np.array(row["codebooks"], dtype=np.float64)
         C = np.array(row["centroids"], dtype=np.float64)
         codes = spark.read.parquet(path + "/codes")
@@ -395,8 +378,8 @@ class DeconIndex:
 
     Contents: the cell-assigned benchmark sign-sum table (bench-sized,
     stays distributed), the unit centroid matrix (ncells x dim) and the
-    per-cell angular radii — saved as a Parquet cells table + a one-row
-    model sidecar (the IvfPqIndex / hot_cache archive pattern).
+    per-cell angular radii — saved as a Parquet cells table + a JSON
+    ``model.json`` sidecar (the IvfPqIndex / hot_cache archive pattern).
 
     ``screen(docs)`` reproduces :func:`semantic_decontaminate_blocked`'s
     exact output (same probe bound, same `_integer_hit` integer verdict
@@ -484,13 +467,10 @@ class DeconIndex:
 
     def save(self, path: str) -> None:
         """Cells table -> ``path/cells``; centroids/radii/params ->
-        ``path/model.json`` (driver-side JSON sidecar via the Hadoop FS
-        API — r12 zero-job sidecar, see ``fsutil``). An EMPTY index
+        ``path/model.json`` (the ``fsutil`` JSON sidecar). An EMPTY index
         saves a model with ncells=0 and no cells table — restore
         reproduces the nothing-can-contaminate behavior."""
         import json as _json
-
-        from ..fsutil import sidecar_delete, sidecar_write_json
 
         if not self.empty:
             self.cells.write.mode("overwrite").parquet(path + "/cells")
@@ -511,7 +491,6 @@ class DeconIndex:
                 "radii": _json.dumps(self.radii),
             },
         )
-        sidecar_delete(self.spark, path + "/model")  # pre-r12 layout
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "DeconIndex":
@@ -519,11 +498,7 @@ class DeconIndex:
 
         import numpy as np
 
-        from ..fsutil import sidecar_read_json
-
-        row = sidecar_read_json(spark, path + "/model.json")
-        if row is None:  # pre-r12 layout
-            row = spark.read.parquet(path + "/model").collect()[0]
+        row = _read_model(spark, path)
         if row["ncells"] == 0:
             return cls(
                 spark, None, {}, None, row["threshold"], row["dim"],
@@ -602,7 +577,7 @@ class MinHashIndex:
     Both are hash-only: RAW TEXT NEVER PERSISTS in the index (the
     shingle store is ~8 B per distinct shingle — same order as the text
     it summarizes but shareable where the text itself may not be).
-    Saved via the Spark writer as Parquet tables + a one-row model
+    Saved via the Spark writer as Parquet tables + a JSON ``model.json``
     sidecar (the hot_cache/IvfPqIndex archive pattern; shared-FS safe).
 
     ``append(batch)`` is trivially frozen-model (the "permutations" are
@@ -706,15 +681,11 @@ class MinHashIndex:
 
     def save(self, path: str) -> None:
         """bands -> ``path/bands``, shingles -> ``path/shingles``
-        (Parquet, overwrite); params -> ``path/model.json``
-        (driver-side JSON sidecar via the Hadoop FS API — r12 zero-job
-        sidecar, see ``fsutil``)."""
-        from ..fsutil import sidecar_delete, sidecar_write_json
-
+        (Parquet, overwrite); params -> ``path/model.json`` (the
+        ``fsutil`` JSON sidecar)."""
         self.bands_df.write.mode("overwrite").parquet(path + "/bands")
         self.shingles.write.mode("overwrite").parquet(path + "/shingles")
         sidecar_write_json(self.spark, path + "/model.json", self._params())
-        sidecar_delete(self.spark, path + "/model")  # pre-r12 layout
 
     def _params(self) -> dict:
         return {
@@ -727,49 +698,11 @@ class MinHashIndex:
         }
 
     @classmethod
-    def _read_params(cls, spark: SparkSession, path: str) -> dict | None:
-        """The model sidecar as a dict (JSON first, pre-r12 one-row
-        parquet as fallback); ``None`` when neither exists — shared by
-        :meth:`load` and the streaming history-dedup loop's per-batch
-        params check (which this turns from a Spark job into a driver
-        file read)."""
-        from ..fsutil import sidecar_read_json
-
-        row = sidecar_read_json(spark, path + "/model.json")
-        if row is not None:
-            return row
-        from ..session import error_condition
-
-        try:
-            prow = spark.read.parquet(path + "/model").collect()[0]
-        except Exception as e:  # missing either way -> None
-            first = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-            msg = str(e)
-            if not (
-                error_condition(e).startswith(first)
-                or "PATH_NOT_FOUND" in msg
-                or "Path does not exist" in msg
-                or "UNABLE_TO_INFER_SCHEMA" in msg
-            ):
-                raise
-            return None
-        return {k: prow[k] for k in prow.__fields__}
-
-    @classmethod
     def load(cls, spark: SparkSession, path: str) -> "MinHashIndex":
         """Re-open: both relations stay lazy Parquet scans (corpus-sized
         data never touches the driver); the model sidecar is a
         driver-side JSON read."""
-        row = cls._read_params(spark, path)
-        if row is None:
-            # message carries the "Path does not exist" marker the
-            # existence-probe callers (curate bootstrap) match on — the
-            # same contract the parquet reader's PATH_NOT_FOUND gave
-            # them before the sidecar moved off parquet (r12)
-            raise FileNotFoundError(
-                f"Path does not exist: {path}/model.json "
-                "(no index model sidecar)"
-            )
+        row = _read_model(spark, path)
         return cls(
             spark,
             spark.read.parquet(path + "/bands"),

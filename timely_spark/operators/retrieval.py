@@ -26,9 +26,10 @@ JVM and libm.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import per_query_topk
 from .text import TOKEN_RE, tokens
 
 BM25_K1 = 1.2
@@ -302,31 +303,11 @@ def _bm25_rowshape(
     return scored
 
 
-def _topk_per_query(
-    scored: DataFrame, id_col: str, k: int, salt_buckets: int = 32
-) -> DataFrame:
-    """Per-query top-k by (score DESC, id ASC) in two phases: a salted
-    local top-k first, so the global rank window never sorts more than
-    salt_buckets * k rows per query — one query matching the whole
-    corpus would otherwise funnel every matched doc through a single
-    window partition (the per-query skew hazard at 100 TB). Ranking
-    uses the ROUNDED score so both engines order identically; ties
-    re-break on the id (the documented contract)."""
-    w_local = Window.partitionBy("query_id", "__salt").orderBy(
-        F.desc("score"), F.asc(id_col)
-    )
-    w_global = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
-        )
-        .withColumn("__r", F.row_number().over(w_local))
-        .filter(F.col("__r") <= k)
-        .withColumn("rank", F.row_number().over(w_global).cast("long"))
-        .filter(F.col("rank") <= k)
-        .drop("__salt", "__r")
+def _topk_per_query(scored: DataFrame, id_col: str, k: int) -> DataFrame:
+    """Per-query top-k by (ROUNDED score DESC, id ASC) — both engines
+    order identically, ties re-break on the id — with a long ``rank``."""
+    return per_query_topk(scored, k, "score", "query_id", id_col).withColumn(
+        "rank", F.col("rank").cast("long")
     )
 
 

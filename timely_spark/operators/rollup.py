@@ -218,17 +218,15 @@ def refresh_rollup(
     days = [r["dt"] for r in newp.select("dt").distinct().collect()]
     if not days:
         return 0
-    from pyspark.errors import AnalysisException
+    from ..fsutil import path_exists
 
-    # existence probe goes through SPARK, not os.path — a local-FS
-    # probe is ALWAYS false for hdfs://, s3a://, ... paths, and a false
-    # "first write" here silently overwrites touched day partitions
-    # with only the batch (r10 review; same bug class curate's
-    # embeddings probe fixed in r8). Only a missing path or an empty
-    # schemaless directory means first write; anything else (executor
-    # loss, corrupt footer, FS errors) propagates.
+    # existence probe through the Hadoop FS that owns the path, not
+    # os.path — a local-FS probe is ALWAYS false for hdfs://, s3a://,
+    # ... paths, and a false "first write" here silently overwrites
+    # touched day partitions with only the batch (r10 review). Read
+    # errors on an existing rollup propagate.
     existing = None
-    try:
+    if path_exists(spark, path):
         # localCheckpoint BEFORE the overwrite: the merged plan must
         # not lazily read files the commit is about to replace
         existing = (
@@ -236,37 +234,17 @@ def refresh_rollup(
             .filter(F.col("dt").isin(days))
             .localCheckpoint(eager=True)
         )
-    except AnalysisException as e:
-        # match the structured error condition first (stable across
-        # Spark versions), falling back to message text only for builds
-        # that don't populate it (ADVICE r10 #3 — coupling correctness
-        # to error prose is brittle; an unmatched benign first write
-        # raises, fail-safe, rather than overwriting)
-        from ..session import error_condition
-
-        first_write_classes = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-        msg = str(e)
-        if not (
-            error_condition(e).startswith(first_write_classes)
-            or "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        ):
-            raise
-        existing = None
     merged = newp if existing is None else (
         existing.select(*newp.columns).unionByName(newp)
         .groupBy(*key_cols, "bucket_ts", *extra_group, "dt")
         .agg(*merge_aggs)
         .select(*newp.columns)
     )
-    conf = spark.conf
-    prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("dt").parquet(path)
-    finally:
-        conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # per-writer dynamic overwrite: only the touched day partitions are
+    # replaced, and the session conf is never toggled
+    merged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("dt").parquet(path)
     return len(days)
 
 

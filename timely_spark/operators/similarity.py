@@ -171,42 +171,41 @@ def cosine_topk(
 
 
 
-def per_query_topk(
-    df: DataFrame,
-    k: int,
-    score_col: str,
-    query_id_col: str = "query_id",
-    id_col: str = "vec_id",
-    salt_buckets: int = 64,
-) -> DataFrame:
-    """Exact two-phase per-query top-k without a corpus-wide window.
+TOPK_SALT_BUCKETS = 64  # the result is exact for any salt count
 
-    ``Window.partitionBy(query)`` funnels EVERY candidate for a query
-    into one task — corpus-sized for brute-force/PQ scans, a straggler
-    at scale. Phase 1 ranks within (query, id-hash salt) slices
-    (parallel, ~candidates/salt_buckets rows each) and keeps k per
-    slice; phase 2 ranks the surviving <= k * salt_buckets rows per
-    query. The (score desc, id asc) ordering is total, so the output is
-    EXACTLY the single-window result — oracle-checked via emb_knn.
-    Returns the input columns plus ``rank``, filtered to rank <= k.
+
+def salted_topk(
+    df: DataFrame, k: int, group_col: str, order: list, salt_col: str
+) -> DataFrame:
+    """The one exact two-phase top-k per ``group_col`` under the total
+    ``order``, without a group-wide window.
+
+    ``Window.partitionBy(group)`` funnels EVERY candidate for a group
+    into one task — corpus-sized for brute-force/PQ scans or a giant
+    cluster, a straggler at scale. Phase 1 ranks within (group,
+    ``salt_col``-hash salt) slices and keeps k per slice; phase 2 ranks
+    the surviving <= k * TOPK_SALT_BUCKETS rows per group. The ordering
+    is total, so the output is EXACTLY the single-window result —
+    oracle-checked via emb_knn. Returns the input columns plus an int
+    ``rank``, filtered to rank <= k.
     """
-    salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
-    w1 = Window.partitionBy(query_id_col, "__salt").orderBy(
-        F.desc(score_col), F.col(id_col)
-    )
-    pruned = (
+    salt = F.pmod(F.xxhash64(F.col(salt_col)), F.lit(TOPK_SALT_BUCKETS))
+    w1 = Window.partitionBy(group_col, "__salt").orderBy(*order)
+    w2 = Window.partitionBy(group_col).orderBy(*order)
+    return (
         df.withColumn("__salt", salt)
         .withColumn("__r1", F.row_number().over(w1))
         .filter(F.col("__r1") <= k)
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.desc(score_col), F.col(id_col)
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2))
+        .withColumn("rank", F.row_number().over(w2))
         .filter(F.col("rank") <= k)
         .drop("__salt", "__r1")
     )
+
+
+def per_query_topk(df, k, score_col, query_id_col="query_id", id_col="vec_id"):
+    """Top-k per query by (``score_col`` desc, ``id_col`` asc)."""
+    order = [F.desc(score_col), F.col(id_col)]
+    return salted_topk(df, k, query_id_col, order, id_col)
 
 
 def hyperplane_weights(
@@ -586,7 +585,6 @@ def cluster_capped_sample(
     cap: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    salt_buckets: int = 32,
 ) -> DataFrame:
     """Diversity-aware subsampling: keep at most ``cap`` vectors per
     coarse k-means cluster (the cluster-balanced selection step of
@@ -601,8 +599,7 @@ def cluster_capped_sample(
     (the dual-engine hash idiom, so the DuckDB oracle reproduces the
     exact kept set), id tie-break — a deterministic uniform sample of
     the cluster rather than a quality-correlated one. The rank runs as
-    the salted two-phase window (local top-cap per (cluster, salt),
-    global top-cap over <= salt_buckets * cap rows), so one giant
+    the salted two-phase window (:func:`salted_topk`), so one giant
     cluster never funnels the corpus through a single window partition.
 
     Output: (id, centroid_id, cos, rank) — kept rows only, rank
@@ -623,19 +620,10 @@ def cluster_capped_sample(
     rk = F.conv(
         F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
     ).cast("long")
-    a = a.withColumn("__rk", rk).withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
-    )
-    w_local = Window.partitionBy("centroid_id", "__salt").orderBy(
-        "__rk", id_col
-    )
-    w_global = Window.partitionBy("centroid_id").orderBy("__rk", id_col)
-    return (
-        a.withColumn("__r", F.row_number().over(w_local))
-        .filter(F.col("__r") <= cap)
-        .withColumn("rank", F.row_number().over(w_global).cast("long"))
-        .filter(F.col("rank") <= cap)
-        .select(id_col, "centroid_id", "cos", "rank")
+    order = [F.col("__rk"), F.col(id_col)]
+    ranked = salted_topk(a.withColumn("__rk", rk), cap, "centroid_id", order, id_col)
+    return ranked.select(
+        id_col, "centroid_id", "cos", F.col("rank").cast("long").alias("rank")
     )
 
 

@@ -70,22 +70,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-def error_condition(e: Exception) -> str:
-    """The structured Spark error condition of ``e`` (empty string when
-    unavailable). THE shared first-write/existence-probe idiom: match
-    this (stable across Spark versions) before falling back to message
-    text — coupling correctness to error prose is brittle (ADVICE r10
-    #3). Tries the Spark 4 name (``getCondition``) first; the
-    deprecated ``getErrorClass`` kept as fallback for older builds."""
-    for name in ("getCondition", "getErrorClass"):
-        get = getattr(e, name, None)
-        if callable(get):
-            try:
-                cond = get()
-            except Exception:
-                continue
-            if cond:
-                return cond
-    return ""

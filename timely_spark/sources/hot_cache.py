@@ -226,14 +226,12 @@ class HotCache:
         """Persist the pinned window + boundary/eviction metadata (the
         S10 HDFS cache archive, GorillaStore.java:165-213) so a restart
         re-pins without replaying ingest. The window goes through the
-        Spark writer; the metadata rides a JSON sidecar written via the
-        Hadoop FS API — both land on the filesystem that owns the path
-        (file://, hdfs://, s3a://), never on a driver-local disk (the
-        store-existence-probe lesson, BASELINE.md; r12 moved the
-        sidecar off the one-row-parquet Spark job, see ``fsutil``)."""
+        Spark writer, the metadata as the ``fsutil`` JSON sidecar —
+        both on the filesystem that owns the path, never a driver-local
+        disk."""
         if self._df is None or self._cut is None:
             raise ValueError("nothing to archive: refresh() first")
-        from ..fsutil import sidecar_delete, sidecar_write_json
+        from ..fsutil import sidecar_write_json
 
         self._df.write.mode("overwrite").parquet(path)
         sidecar_write_json(
@@ -252,35 +250,17 @@ class HotCache:
                 ),
             },
         )
-        sidecar_delete(self.spark, path + "_meta")  # pre-r12 layout
 
     def restore(self, path: str) -> None:
         """Re-pin an archived window in this (possibly fresh) session:
         the restart path. The restored cache carries the archived
         boundary, eviction list and admission config, so hybrid() seams
-        exactly as before the restart. The metadata sidecar is a
-        driver-side JSON read (r12 zero-job sidecar, see ``fsutil``);
-        pre-r12 one-row-parquet sidecars still restore via the
-        fallback."""
-        import json as _json
-
+        exactly as before the restart."""
         from ..fsutil import sidecar_read_json
 
         meta = sidecar_read_json(self.spark, path + "_meta.json")
-        if meta is None:  # pre-r12 layout
-            row = self.spark.read.parquet(path + "_meta").collect()[0]
-            meta = {
-                "cut": row["cut"],
-                "newest": row["newest"],
-                "evicted": _json.loads(row["evicted"]),
-                "non_cached": _json.loads(row["non_cached"]),
-                "window_ms": row["window_ms"],
-                "max_unique_tag_sets": (
-                    row["max_unique_tag_sets"]
-                    if "max_unique_tag_sets" in row.__fields__
-                    else None
-                ),
-            }
+        if meta is None:
+            raise FileNotFoundError(f"no cache archive at {path}")
         if self._df is not None:
             self._df.unpersist()
         self._df = self.spark.read.parquet(path).cache()

@@ -42,6 +42,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fsutil import path_exists, rewrite_in_place, sidecar_read_json, sidecar_write_json
+
 DAY_MS = 86_400_000
 
 
@@ -134,23 +136,20 @@ def write_points(
         # layout sidecar: queries need the modulus to reconstruct a
         # metric's bucket for directory pruning (underscore files are
         # invisible to Spark's parquet reader)
-        import json
-        import os
+        sidecar_write_json(
+            points.sparkSession,
+            _layout_path(path),
+            {"bucket_metrics": bucket_metrics},
+        )
 
-        with open(os.path.join(path, "_layout.json"), "w") as f:
-            json.dump({"bucket_metrics": bucket_metrics}, f)
+
+def _layout_path(path: str) -> str:
+    return path.rstrip("/") + "/_layout.json"
 
 
 def read_layout(path: str) -> dict:
     """The store's layout sidecar ({} for unbucketed stores)."""
-    import json
-    import os
-
-    p = os.path.join(path, "_layout.json")
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {}
+    return sidecar_read_json(SparkSession.active(), _layout_path(path)) or {}
 
 
 def read_points(spark: SparkSession, path: str) -> DataFrame:
@@ -284,10 +283,7 @@ def compact_meta_with_cutoff(
     rewrite is fine at any data scale — the catalog is O(distinct tag
     values), not O(points). Run from the retention maintenance job.
     """
-    import os
-    import shutil
-
-    if not os.path.isdir(meta_path):
+    if not path_exists(spark, meta_path):
         return
     from ..operators.retention import ttl_for_metric
 
@@ -295,10 +291,11 @@ def compact_meta_with_cutoff(
     kept = compact_meta(spark, meta_path).filter(
         F.col("last_seen") >= F.lit(now_ms) - ttl
     )
-    tmp = meta_path.rstrip("/") + "__compacting"
-    kept.coalesce(1).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(meta_path)
-    shutil.move(tmp, meta_path)
+    rewrite_in_place(
+        spark,
+        meta_path,
+        lambda tmp: kept.coalesce(1).write.mode("overwrite").parquet(tmp),
+    )
 
 
 def compact_partitions(
@@ -311,26 +308,25 @@ def compact_partitions(
     """
     df = spark.read.parquet(path)
     part_cols = [c for c in ("metric", "metric_bucket", "dt") if c in df.columns]
-    tmp = path.rstrip("/") + "__compacting"
-    # same write-plan shape as write_points (r13): explicit parallelism
-    # (files-per-task is the cost driver, not bytes-per-task) and a
-    # partition-col-prefixed sort so the writer adds no second sort
-    n_write = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    (
-        df.repartition(n_write, *[F.col(c) for c in part_cols])
-        .sortWithinPartitions(*part_cols, "ts")
-        .write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .option("maxRecordsPerFile", 4_000_000)
-        .parquet(tmp)
-    )
-    import os
-    import shutil
-
     # the layout sidecar must survive the rewrite (bucketed-store
     # pruning and engine modulus discovery read it)
-    sidecar = os.path.join(path, "_layout.json")
-    if os.path.exists(sidecar):
-        shutil.copy(sidecar, os.path.join(tmp, "_layout.json"))
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
+    layout = sidecar_read_json(spark, _layout_path(path))
+
+    def write(tmp: str) -> None:
+        # same write-plan shape as write_points (r13): explicit
+        # parallelism (files-per-task is the cost driver, not
+        # bytes-per-task) and a partition-col-prefixed sort so the
+        # writer adds no second sort
+        n_write = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        (
+            df.repartition(n_write, *[F.col(c) for c in part_cols])
+            .sortWithinPartitions(*part_cols, "ts")
+            .write.mode("overwrite")
+            .partitionBy(*part_cols)
+            .option("maxRecordsPerFile", 4_000_000)
+            .parquet(tmp)
+        )
+        if layout is not None:
+            sidecar_write_json(spark, _layout_path(tmp), layout)
+
+    rewrite_in_place(spark, path, write)

@@ -80,7 +80,7 @@ def register_screen_batch(
     admitted). Within-batch near-dups are NOT collapsed here — compose
     ``minhash_dedup`` upstream if the stream itself carries them; the
     contract is against HISTORY, matching curate's stage."""
-    from ..fsutil import sidecar_write_json
+    from ..fsutil import sidecar_read_json, sidecar_write_json
     from ..operators.ann_index import MinHashIndex
     from ..operators.dedup import (
         _shingle_hashes,
@@ -102,9 +102,8 @@ def register_screen_batch(
         )
     )
     # r12: the per-batch params check is a driver-side sidecar read
-    # (was a one-row-parquet Spark job EVERY micro-batch); pre-r12
-    # parquet sidecars still load via the shared fallback
-    row = MinHashIndex._read_params(spark, index_path)
+    # (was a one-row-parquet Spark job EVERY micro-batch)
+    row = sidecar_read_json(spark, index_path + "/model.json")
     if row is None:
         sidecar_write_json(
             spark,
@@ -152,28 +151,27 @@ def register_screen_batch(
         # pin the survivor set: THREE writes follow (output, bands,
         # shingles) and each would otherwise re-run the screen join
         survivors = pin(docs.join(hits, id_col, "left_anti"))
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+
+    def replace_batch(df: DataFrame, path: str) -> None:
+        # per-writer dynamic overwrite: replaces only this batch's
+        # partition and leaves the session conf alone
+        df.withColumn("__batch", F.lit(int(batch_id))).write.mode(
+            "overwrite"
+        ).option("partitionOverwriteMode", "dynamic").partitionBy(
+            "__batch"
+        ).parquet(path)
+
     try:
-        tagged = survivors.withColumn("__batch", F.lit(int(batch_id)))
-        tagged.write.mode("overwrite").partitionBy("__batch").parquet(
-            out_path
-        )
+        replace_batch(survivors, out_path)
         # survivor shingles = the pinned batch pass restricted to the
         # surviving ids (an inner join of two pins — no re-sign)
         surv_sh = sh_docs.join(survivors.select(id_col), id_col)
-        minhash_bands_from_shingles(
-            surv_sh, id_col, num_hashes, bands
-        ).withColumn("__batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).partitionBy("__batch").parquet(index_path + "/bands")
-        surv_sh.withColumn("__batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).partitionBy("__batch").parquet(index_path + "/shingles")
+        replace_batch(
+            minhash_bands_from_shingles(surv_sh, id_col, num_hashes, bands),
+            index_path + "/bands",
+        )
+        replace_batch(surv_sh, index_path + "/shingles")
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         # deterministic pin lifecycle (VERDICT r12 item 1): all pins are
         # fully consumed by the writes above; without this every
         # micro-batch leaked persisted RDDs for the session's life
@@ -249,7 +247,7 @@ def _fold_committed_partitions(
     hpath = jvm.org.apache.hadoop.fs.Path
     root = hpath(table_path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    # recoverable order (the _compact_table rule): park the folded
+    # recoverable order (the fsutil.rewrite_in_place rule): park the folded
     # sources before removing anything, adopt the new archive, then
     # drop the parked copies
     parked = []

@@ -265,29 +265,18 @@ def curate(spark, sf_dir: str, out: str, seq_len: int = 512, min_p_keep: float =
     if history_index is not None:
         # cross-RUN near-dedup against the persisted corpus index
         # (ann_index.MinHashIndex — the daily-loop accumulator).
-        # Existence probe goes THROUGH Spark (try-load, match the
-        # structured error class), never os.path: a driver-local probe
-        # is always false on hdfs://s3a:// and would silently flip
-        # "screen against history" into "bootstrap overwrite" — the
-        # store.py/refresh_rollup bug class, hit twice before.
+        # Existence probe goes through the Hadoop FS that owns the path,
+        # never os.path: a driver-local probe is always false on
+        # hdfs://s3a:// and would silently flip "screen against history"
+        # into "bootstrap overwrite". Any load error propagates.
+        from timely_spark.fsutil import sidecar_read_json
         from timely_spark.operators.ann_index import MinHashIndex
 
-        from timely_spark.session import error_condition
-
-        try:
+        history_bootstrap = (
+            sidecar_read_json(spark, history_index + "/model.json") is None
+        )
+        if not history_bootstrap:
             history_idx = MinHashIndex.load(spark, history_index)
-            history_bootstrap = False
-        except Exception as e:
-            first = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-            msg = str(e)
-            if not (
-                error_condition(e).startswith(first)
-                or "PATH_NOT_FOUND" in msg
-                or "Path does not exist" in msg
-                or "UNABLE_TO_INFER_SCHEMA" in msg
-            ):
-                raise
-            history_bootstrap = True
         if (
             history_idx is not None
             and history_threshold is not None
@@ -450,31 +439,21 @@ def curate(spark, sf_dir: str, out: str, seq_len: int = 512, min_p_keep: float =
             # survivor text itself (hashed_text_embedding — the
             # deterministic signed-projection embedder), so corpora
             # without precomputed vectors still get semantic dedup.
-            # existence probe must go through Spark, not
-            # os.path.exists — the corpus dir can be hdfs:// or s3a://,
-            # where a local-FS probe is ALWAYS false and would silently
-            # switch semantic dedup to the hashed-text embedder even
-            # though a real embeddings table exists (ADVICE r7)
+            # existence probe through the Hadoop FS that owns the corpus
+            # dir, never os.path.exists — on hdfs:// or s3a:// a local
+            # probe is ALWAYS false and would silently switch semantic
+            # dedup to the hashed-text embedder (ADVICE r7). Only a
+            # missing table downgrades; read errors propagate.
             import sys as _sys
 
-            from pyspark.errors import AnalysisException
-
+            from timely_spark.fsutil import path_exists
             from timely_spark.operators.similarity import semantic_dedup
 
             emb_path = f"{sf_dir}/embeddings.parquet"
-            try:
+            if path_exists(spark, emb_path):
                 emb = spark.read.parquet(emb_path)
                 emb_source = "embeddings table"
-            except AnalysisException as e:
-                # ONLY a missing table downgrades to the text embedder;
-                # any other read failure (expired credentials, corrupt
-                # footer) must surface, not silently change the
-                # survivor set (self-review r8)
-                msg = str(e)
-                if not (
-                    "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-                ):
-                    raise
+            else:
                 emb = None
                 emb_source = "hashed text embedder (no embeddings table)"
             print(
