@@ -810,8 +810,9 @@ def test_correctness_local_artifact_fresh():
 def test_query_rollup_matches_raw_query(spark, tmp_path_factory):
     """The rollup tier answers a downsample query IDENTICALLY to the
     raw-point path (avg needs the sum/count partials, the hardest
-    case), and rejects ineligible requests (rate; non-divisible
-    period; non-ALL_AUTHS)."""
+    case; also extrema under another cross-series aggregator, regex
+    tags and non-grouping filters), and rejects ineligible requests
+    (rate; non-divisible period; non-ALL_AUTHS)."""
     from timely_spark.api import ALL_AUTHS, TimelyEngine
 
     root = tmp_path_factory.mktemp("rollup_engine")
@@ -820,7 +821,8 @@ def test_query_rollup_matches_raw_query(spark, tmp_path_factory):
     for u in range(4):
         for i in range(120):
             lines.append(
-                f"put roll.m {B + 60_000 * i + u} {float((i * 7 + u) % 23)} user=u{u}"
+                f"put roll.m {B + 60_000 * i + u} {float((i * 7 + u) % 23)} "
+                f"user=u{u} host=h{u % 2}"
             )
     eng.put_lines(lines)
     partials = eng.build_rollup(level_ms=300_000)
@@ -859,6 +861,21 @@ def test_query_rollup_matches_raw_query(spark, tmp_path_factory):
     assert canon(eng.query_rollup(req_cnt, partials, 300_000,
                                   auths=ALL_AUTHS)) == canon(
         eng.query(req_cnt, auths=ALL_AUTHS))
+    for sub in (
+        # extrema downsample under a different cross-series aggregator
+        {"aggregator": "min", "downsample": "15m-max", "tags": {"host": ".*"}},
+        {"aggregator": "avg", "downsample": "10m-min", "tags": {}},
+        # host-regex tag, alone and under a collapsing aggregator pair
+        {"aggregator": "sum", "downsample": "15m-avg", "tags": {"host": "h(1|2)"}},
+        {"aggregator": "max", "downsample": "5m-max", "tags": {"user": "u[02]"}},
+        # non-grouping filter: a predicate, not a projected tag
+        {"aggregator": "sum", "downsample": "15m-sum", "tags": {"host": "*"},
+         "filters": [{"tagk": "user", "filter": "u3|u0", "groupBy": False}]},
+    ):
+        r = dict(req, queries=[dict(sub, metric="roll.m")])
+        want = eng.query(r, auths=ALL_AUTHS)
+        assert want and canon(eng.query_rollup(r, partials, 300_000,
+                                               auths=ALL_AUTHS)) == canon(want), sub
     import pytest
 
     with pytest.raises(ValueError, match="not rollup-eligible"):

@@ -3,6 +3,7 @@
 import os
 import shutil
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -79,6 +80,11 @@ def test_retention_delete_plan(spark, store):
     )
     assert all("metric=sys.cpu.user" in p for p in doomed)
     assert all(p.startswith(path) for p in doomed)
+    # a URI names the same store: the plan lists it through the Hadoop FS
+    uri = Path(path).as_uri()
+    assert doomed and retention_delete_plan(
+        spark, uri, now_ms=now, ttls={"sys.": DAY}, default_ttl_ms=30 * DAY
+    ) == [uri + p[len(path):] for p in doomed]
 
 
 def test_compaction_merges_small_files(spark, tmp_path):

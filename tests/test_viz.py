@@ -151,3 +151,37 @@ def test_eval_batch_memoizes_per_distinct_expression():
     assert len(calls) == 3
     assert set(calls) == {"A", "(A|B)", None}
     assert list(out) == [True, False, True, False, True, False, False]
+
+
+def test_engine_viz_catalog_survives_restart_on_uri_store(spark, tmp_path):
+    """The viz catalog of a ``file://`` store is found again after a
+    restart, and a put never narrows it below the store's existing
+    labels — not even when the catalog is missing."""
+    import shutil
+
+    from timely_spark.api import TimelyEngine
+
+    b = 1_447_767_913_000
+    store = tmp_path.as_uri() + "/m"
+    TimelyEngine(spark, store_path=store).put_lines(
+        [f"put m {b + i} 1.0 a=b viz=A" for i in range(3)]
+    )
+    q = {
+        "start": b - 1000,
+        "end": b + 60_000,
+        "msResolution": True,
+        "queries": [{"aggregator": "none", "metric": "m", "tags": {}}],
+    }
+
+    def n_points(eng):
+        return sum(len(s["dps"]) for s in eng.query(q, auths={"A", "B"}))
+
+    eng = TimelyEngine(spark, store_path=store)  # restart
+    eng.put_lines([f"put m {b + 100 + i} 2.0 a=b viz=B" for i in range(2)])
+    assert eng._viz_known() == {"A", "B"}
+    assert n_points(eng) == 5
+    shutil.rmtree(tmp_path / "m_meta_viz")  # a store with no catalog
+    eng = TimelyEngine(spark, store_path=store)
+    eng.put_lines([f"put m {b + 200} 3.0 a=b viz=C"])
+    assert eng._viz_known() == {"A", "B", "C"}
+    assert n_points(eng) == 5

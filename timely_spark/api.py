@@ -20,12 +20,17 @@ from typing import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .fsutil import delete_path, list_dirs, path_exists
 from .model import METRIC_SCHEMA
 from .operators.exclusions import apply_exclusions
 from .operators.meta import build_meta, metrics_dump, search_lookup, suggest
 from .operators.retention import ageoff_filter, retention_delete_plan
-from .parse import parse_put_line
-from .plans.builder import run_query
+from .plans.builder import (
+    catalog_has_tags,
+    run_query,
+    run_rollup_query,
+    series_partials,
+)
 from .plans.request import QueryRequest
 from .plans.response import to_query_response
 from .sources.lineprotocol import parse_lines_df
@@ -140,11 +145,10 @@ class TimelyEngine:
             # to metric=*/dt=* ones; Spark partition discovery then fails
             # on conflicting partition columns and every read of the store
             # breaks. Validate against the sidecar / existing dirs instead.
-            import glob
-            import os
-
             existing = sidecar
-            if existing is None and glob.glob(os.path.join(store_path, "metric=*")):
+            if existing is None and any(
+                d.startswith("metric=") for d in list_dirs(spark, store_path)
+            ):
                 existing = 0  # unbucketed partition dirs already present
             if existing is not None and existing != bucket_metrics:
                 raise ValueError(
@@ -359,7 +363,7 @@ class TimelyEngine:
         matches zero series (the reference's HTTP behavior).
         """
         req = QueryRequest.from_dict(request)
-        return self._run(req, auths, strict=strict)
+        return self._run(req, lambda: self._frames(req, auths), strict=strict)
 
     def query_get(self, params: dict, auths=None, strict: bool = False) -> list[dict]:
         """GET /api/query?start=..&m=agg:[rate:][ds:]metric{tags} — the
@@ -367,32 +371,17 @@ class TimelyEngine:
         semantics as :meth:`query`."""
         from .plans.request import parse_get_query
 
-        return self._run(parse_get_query(params), auths, strict=strict)
+        req = parse_get_query(params)
+        return self._run(req, lambda: self._frames(req, auths), strict=strict)
 
     def build_rollup(self, level_ms: int, now_ms: int | None = None) -> DataFrame:
         """Continuous-aggregate partials of this store at ``level_ms``:
-        (metric, __series, tags, bucket_ts, n, vsum, vmin, vmax) — the
+        (metric, __series, bucket_ts, tags, n, vsum, vmin, vmax) — the
         hypertable tier (operators/rollup.py) at per-series grain, ready
         for :meth:`query_rollup`. Persist it (parquet, partitioned like
         the store) in a real deployment; the frame is also usable lazily
         for tests/oracles."""
-        from .model import series_id
-
-        pts = self.points(now_ms=now_ms)
-        bucket = (F.col("ts") - F.col("ts") % F.lit(level_ms)).alias("bucket_ts")
-        return (
-            pts.withColumn("__series", series_id())
-            .groupBy("metric", "__series", bucket)
-            .agg(
-                F.first("tags").alias("tags"),
-                F.count("value").alias("n"),
-                F.sum(F.col("value").cast("decimal(38,10)")).alias("vsum"),
-                F.min("value").alias("vmin"),
-                F.max("value").alias("vmax"),
-            )
-        )
-
-    _ROLLUP_AGGS = {"avg", "sum", "min", "max", "count"}
+        return series_partials(self.points(now_ms=now_ms), level_ms)
 
     def query_rollup(
         self,
@@ -414,11 +403,10 @@ class TimelyEngine:
         ALL_AUTHS (or a store with no labeled rows, which is the
         caller's contract to know)."""
         req = QueryRequest.from_dict(request)
-        outs = self.query_rollup_frames(request, partials, level_ms, auths)
-        out: list[dict] = []
-        for r in outs:
-            out.extend(to_query_response(r, ms_resolution=req.ms_resolution))
-        return out
+        return self._run(
+            req,
+            lambda: self.query_rollup_frames(request, partials, level_ms, auths),
+        )
 
     def query_rollup_frames(
         self,
@@ -431,111 +419,27 @@ class TimelyEngine:
         BEFORE response shaping — the Spark-native / plan-auditable
         entry (VERDICT r11 #3), with :meth:`query_rollup`'s exact
         eligibility rules and semantics."""
-        from .operators.downsample import combine_series
-        from .plans.builder import _tag_predicates
-        from .plans.request import QueryRequest
-
         if auths is not ALL_AUTHS:
             raise ValueError(
                 "query_rollup bypasses per-row visibility; pass "
                 "auths=ALL_AUTHS or use query()"
             )
-        req = QueryRequest.from_dict(request)
-        outs = []
-        for q in req.queries:
-            spec = q.downsample_spec()
-            if (
-                q.rate
-                or q.tsuids
-                or spec is None
-                or spec.period_ms % level_ms != 0
-                or spec.aggregator not in self._ROLLUP_AGGS
-                or q.aggregator not in self._ROLLUP_AGGS
-            ):
-                raise ValueError(
-                    f"SubQuery not rollup-eligible (metric={q.metric!r}); "
-                    "use query()"
-                )
-            if (req.end + 1) % level_ms != 0:
-                # partials cannot cut inside a level bucket: an unaligned
-                # end would silently include points past it (query()
-                # filters raw ts <= end exactly)
-                raise ValueError(
-                    f"SubQuery not rollup-eligible: end={req.end} does not "
-                    f"align to the level boundary (end = k*{level_ms} - 1); "
-                    "use query()"
-                )
-            period = spec.period_ms
-            start = req.start - (req.start % period)
-            df = partials.filter(F.col("metric") == q.metric).filter(
-                (F.col("bucket_ts") >= start) & (F.col("bucket_ts") <= req.end)
-            )
-            df = _tag_predicates(df, q.tags)
-            df = _tag_predicates(df, q.filters)
-            off = F.col("bucket_ts") - F.lit(start)
-            pb = (F.lit(start) + (off - off % F.lit(period))).alias("bucket_ts")
-            merged = df.groupBy("metric", "__series", pb).agg(
-                F.first("tags").alias("tags"),
-                F.sum("n").alias("n"),
-                F.sum("vsum").alias("vsum"),
-                F.min("vmin").alias("vmin"),
-                F.max("vmax").alias("vmax"),
-            )
-            def _value(agg):
-                return {
-                    "avg": (F.col("vsum") / F.col("n")).cast("double"),
-                    "sum": F.col("vsum").cast("double"),
-                    "min": F.col("vmin"),
-                    "max": F.col("vmax"),
-                    "count": F.col("n").cast("double"),
-                }[agg]
-
-            if q.aggregator == spec.aggregator:
-                # match build_subquery's single-aggregation collapse:
-                # equal downsample/combine aggregators act over ALL
-                # points per (projected tags, bucket) — avg is the
-                # WEIGHTED average, count counts points, not series.
-                # Partials re-merge across series first, then the value.
-                from .model import series_id
-
-                keys = F.array(*[F.lit(k) for k in sorted(q.tags.keys())])
-                projected = F.map_filter(
-                    "tags", lambda k, _v: F.array_contains(keys, k)
-                )
-                pre = merged.withColumn("tags", projected).withColumn(
-                    "__gkey", series_id()
-                )
-                flat = pre.groupBy("__gkey", "bucket_ts").agg(
-                    F.first("metric").alias("metric"),
-                    F.first("tags").alias("tags"),
-                    F.sum("n").alias("n"),
-                    F.sum("vsum").alias("vsum"),
-                    F.min("vmin").alias("vmin"),
-                    F.max("vmax").alias("vmax"),
-                )
-                outs.append(
-                    flat.select(
-                        "metric", "tags", "bucket_ts",
-                        _value(q.aggregator).alias("value"),
-                    )
-                )
-                continue
-            ds = merged.select(
-                "metric", "tags", "bucket_ts", _value(spec.aggregator).alias("value")
-            )
-            outs.append(combine_series(ds, sorted(q.tags.keys()), q.aggregator))
-        return outs
+        return run_rollup_query(partials, QueryRequest.from_dict(request), level_ms)
 
     def _record_viz(self, pts: DataFrame) -> None:
         """Fold the batch's distinct viz expressions into the sidecar
         catalog (one tiny job on the already-checkpointed batch; queries
-        then never scan the store for them)."""
-        batch = {
+        then never scan the store for them). Runs after the store append."""
+        known = self._viz_known()
+        if known is None:
+            # no catalog yet: establish it from the whole store, which
+            # already holds this batch, so it never omits labels written
+            # before it existed
+            pts = self._durable_points()
+        new = {
             r[0]
             for r in pts.select("viz").filter(F.col("viz").isNotNull()).distinct().collect()
-        }
-        known = self._viz_known()
-        new = batch - (known or set())
+        } - (known or set())
         if new or known is None:
             # the write also *establishes* the catalog on first ingest, so
             # an all-unlabeled store is "known empty", not "unknown"
@@ -548,39 +452,11 @@ class TimelyEngine:
         """The catalog's distinct viz expressions, or None when this store
         has no sidecar (populated outside the engine) — callers then fall
         back to viz_filter's distinct scan."""
-        if self._viz_exprs is None:
-            import os
-
-            if os.path.isdir(self._viz_path):
-                self._viz_exprs = {
-                    r[0] for r in self.spark.read.parquet(self._viz_path).collect()
-                }
+        if self._viz_exprs is None and path_exists(self.spark, self._viz_path):
+            self._viz_exprs = {
+                r[0] for r in self.spark.read.parquet(self._viz_path).collect()
+            }
         return self._viz_exprs
-
-    def _catalog_has_tags(self, q) -> bool:
-        """True iff the meta catalog holds a series matching the SubQuery's
-        metric + tag predicates. The reference's "No matching tags" check
-        consults the META table, not the query result (DataStore.java:
-        938-941): a matching-tags query over an empty time window is a
-        valid 200/empty response, never a 400. Runs only on the
-        strict+empty-result path, against the tiny meta table."""
-        from .parse import is_tag_regex
-
-        if q.tsuids:
-            return True  # tsuid SubQueries name series directly, no tag check
-        base = self.meta().filter(F.col("metric") == q.metric)
-        if not base.limit(1).take(1):
-            return False  # unknown metric
-        for k, v in {**q.tags, **q.filters}.items():
-            m = base.filter(F.col("tag_key") == k)
-            if v not in ("*", ".*"):
-                if is_tag_regex(v):
-                    m = m.filter(F.col("tag_value").rlike(f"^(?:{v})$"))
-                else:
-                    m = m.filter(F.col("tag_value") == v)
-            if not m.limit(1).take(1):
-                return False
-        return True
 
     def query_frames(self, request: dict, auths=None) -> list[DataFrame]:
         """One result DataFrame per SubQuery BEFORE response shaping —
@@ -605,13 +481,14 @@ class TimelyEngine:
             bucket_metrics=self.bucket_metrics,
         )
 
-    def _run(self, req: QueryRequest, auths, strict: bool = False) -> list[dict]:
+    def _run(self, req: QueryRequest, frames, strict: bool = False) -> list[dict]:
+        """Plan (``frames()``: one frame per SubQuery), collect and shape
+        under the shared lock, so no put unpins what the plan reads."""
         out: list[dict] = []
         with self._rw.reading():
-            results = self._frames(req, auths)
-            for q, r in zip(req.queries, results):
+            for q, r in zip(req.queries, frames()):
                 part = to_query_response(r, ms_resolution=req.ms_resolution)
-                if strict and not part and not self._catalog_has_tags(q):
+                if strict and not part and not catalog_has_tags(self.meta(), q):
                     raise NoMatchingTagsError("No matching tags")
                 out.extend(part)
         return out
@@ -668,8 +545,6 @@ class TimelyEngine:
         to drop, so age-off is a filtered REWRITE of the table — the
         documented trade of that layout (query-time ageoff_filter keeps
         results correct between maintenance runs either way)."""
-        import shutil
-
         from .sources.store import compact_meta_with_cutoff
 
         if self.series_table is not None:
@@ -691,7 +566,7 @@ class TimelyEngine:
                 self.default_ttl_ms or 7 * 86_400_000,
             )
             for p in doomed:
-                shutil.rmtree(p, ignore_errors=True)
+                delete_path(self.spark, p)
         compact_meta_with_cutoff(
             self.spark,
             self.meta_path,

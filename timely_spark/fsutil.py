@@ -40,6 +40,23 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
+def list_dirs(spark: SparkSession, path: str) -> list[str]:
+    """Sorted names of the directories directly under ``path``; empty
+    when ``path`` does not exist."""
+    fs, p = _fs_path(spark, path)
+    if not fs.exists(p):
+        return []
+    return sorted(
+        st.getPath().getName() for st in fs.listStatus(p) if st.isDirectory()
+    )
+
+
+def delete_path(spark: SparkSession, path: str) -> None:
+    """Delete ``path`` recursively; a missing path is not an error."""
+    fs, p = _fs_path(spark, path)
+    fs.delete(p, True)
+
+
 def sidecar_write_json(spark: SparkSession, path: str, obj: dict) -> None:
     """Write ``obj`` as JSON at ``path`` (overwrite), via the Hadoop FS
     that owns the path. Zero Spark jobs."""

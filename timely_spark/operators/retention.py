@@ -62,46 +62,34 @@ def retention_delete_plan(
     spark, store_path: str, now_ms: int, ttls: dict[str, int], default_ttl_ms: int
 ) -> list[str]:
     """Enumerate store partition directories (layout: metric=<m>/dt=<day>)
-    that are wholly expired. Returns the paths; the caller deletes them.
+    that are wholly expired, listed through the Hadoop FS that owns
+    ``store_path``. Returns the paths; the caller deletes them.
     Partition-drop is metadata-only — no row-level rewrite at 100 TB.
     """
-    import math
     import os
 
+    from ..fsutil import list_dirs
+
     doomed: list[str] = []
-    if not os.path.isdir(store_path):
-        return doomed
-    for bdir in sorted(os.listdir(store_path)):
-        # metric-bucketed layout: a bucket directory mixes metrics, so it
-        # may only drop once past EVERY metric's TTL (conservative =
-        # max over configured TTLs). The query-time ageoff_filter hides
-        # shorter-TTL metrics in the meantime; per-metric reclamation
-        # inside a bucket would be a row-level rewrite, deliberately not
-        # done at rest (compaction can fold it in if storage pressure
-        # demands).
-        if not bdir.startswith("metric_bucket="):
+    for top in list_dirs(spark, store_path):
+        key, _, value = top.partition("=")
+        if key == "metric_bucket":
+            # metric-bucketed layout: a bucket directory mixes metrics, so
+            # it may only drop once past EVERY metric's TTL (conservative =
+            # max over configured TTLs). The query-time ageoff_filter hides
+            # shorter-TTL metrics in the meantime; per-metric reclamation
+            # inside a bucket would be a row-level rewrite, deliberately
+            # not done at rest (compaction can fold it in if storage
+            # pressure demands).
+            ttl = max([default_ttl_ms, *ttls.values()])
+        elif key == "metric":
+            prefix = max((p for p in ttls if value.startswith(p)), key=len, default=None)
+            ttl = default_ttl_ms if prefix is None else ttls[prefix]
+        else:
             continue
-        ttl = max([default_ttl_ms, *ttls.values()]) if ttls else default_ttl_ms
         cutoff_day = (now_ms - ttl) // 86_400_000
-        for ddir in sorted(os.listdir(os.path.join(store_path, bdir))):
-            if not ddir.startswith("dt="):
-                continue
-            if int(ddir.split("=", 1)[1]) < cutoff_day:
-                doomed.append(os.path.join(store_path, bdir, ddir))
-    for mdir in sorted(os.listdir(store_path)):
-        if not mdir.startswith("metric="):
-            continue
-        metric = mdir.split("=", 1)[1]
-        ttl = default_ttl_ms
-        best = -1
-        for prefix, t in ttls.items():
-            if metric.startswith(prefix) and len(prefix) > best:
-                best, ttl = len(prefix), t
-        cutoff_day = (now_ms - ttl) // 86_400_000
-        for ddir in sorted(os.listdir(os.path.join(store_path, mdir))):
-            if not ddir.startswith("dt="):
-                continue
-            day = int(ddir.split("=", 1)[1])
-            if day < cutoff_day:  # whole day strictly older than the cutoff day
-                doomed.append(os.path.join(store_path, mdir, ddir))
+        for ddir in list_dirs(spark, os.path.join(store_path, top)):
+            # whole day strictly older than the cutoff day
+            if ddir.startswith("dt=") and int(ddir[3:]) < cutoff_day:
+                doomed.append(os.path.join(store_path, top, ddir))
     return doomed

@@ -18,8 +18,44 @@ oracle can verify merge correctness end-to-end.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.time import time_bucket_ms
+
+PARTIAL_AGGREGATORS = ("avg", "sum", "min", "max", "count")
+
+
+def partial_aggs(value_col: str = "value") -> list[Column]:
+    """The classic partial (n, vsum, vmin, vmax); vsum is decimal-exact,
+    so merges and the final avg are accumulation-order-independent."""
+    return [
+        F.count(value_col).alias("n"),
+        F.sum(F.col(value_col).cast("decimal(38,10)")).alias("vsum"),
+        F.min(value_col).alias("vmin"),
+        F.max(value_col).alias("vmax"),
+    ]
+
+
+def merge_partial_aggs() -> list[Column]:
+    """Merge classic partials (associative: any grouping gives the same)."""
+    return [
+        F.sum("n").alias("n"),
+        F.sum("vsum").alias("vsum"),
+        F.min("vmin").alias("vmin"),
+        F.max("vmax").alias("vmax"),
+    ]
+
+
+def partial_value(aggregator: str) -> Column:
+    """A classic partial's value under one of PARTIAL_AGGREGATORS."""
+    return {
+        "avg": (F.col("vsum") / F.col("n")).cast("double"),
+        "sum": F.col("vsum").cast("double"),
+        "min": F.col("vmin"),
+        "max": F.col("vmax"),
+        "count": F.col("n").cast("double"),
+    }[aggregator]
 
 
 def rollup_partials(
@@ -30,14 +66,9 @@ def rollup_partials(
     value_col: str = "value",
 ) -> DataFrame:
     """(keys..., bucket_ts, n, vsum, vmin, vmax) at ``level_ms``
-    resolution. vsum is decimal-exact so downstream merges and the
-    final avg are accumulation-order-independent."""
-    bucket = (F.col(ts_col) - F.col(ts_col) % F.lit(level_ms)).alias("bucket_ts")
-    return points.groupBy(*key_cols, bucket).agg(
-        F.count(value_col).alias("n"),
-        F.sum(F.col(value_col).cast("decimal(38,10)")).alias("vsum"),
-        F.min(value_col).alias("vmin"),
-        F.max(value_col).alias("vmax"),
+    resolution."""
+    return points.groupBy(*key_cols, time_bucket_ms(ts_col, level_ms)).agg(
+        *partial_aggs(value_col)
     )
 
 
@@ -54,15 +85,9 @@ def merge_rollup(
         raise ValueError(
             f"coarser level {coarser_ms} not a multiple of {level_ms}"
         )
-    bucket = (
-        F.col("bucket_ts") - F.col("bucket_ts") % F.lit(coarser_ms)
-    ).alias("bucket_ts")
-    return partials.groupBy(*key_cols, bucket).agg(
-        F.sum("n").alias("n"),
-        F.sum("vsum").alias("vsum"),
-        F.min("vmin").alias("vmin"),
-        F.max("vmax").alias("vmax"),
-    )
+    return partials.groupBy(
+        *key_cols, time_bucket_ms("bucket_ts", coarser_ms)
+    ).agg(*merge_partial_aggs())
 
 
 def hll_partials(
@@ -79,8 +104,7 @@ def hll_partials(
     count, partials union losslessly to any coarser window, so
     distinct-user rollups get the same 60x scan reduction as the
     sum/min/max partials."""
-    bucket = (F.col(ts_col) - F.col(ts_col) % F.lit(level_ms)).alias("bucket_ts")
-    return points.groupBy(*key_cols, bucket).agg(
+    return points.groupBy(*key_cols, time_bucket_ms(ts_col, level_ms)).agg(
         F.hll_sketch_agg(distinct_col, F.lit(lg_k)).alias("hll")
     )
 
@@ -99,10 +123,9 @@ def hll_merge(
         raise ValueError(
             f"coarser level {coarser_ms} not a multiple of {level_ms}"
         )
-    bucket = (
-        F.col("bucket_ts") - F.col("bucket_ts") % F.lit(coarser_ms)
-    ).alias("bucket_ts")
-    return partials.groupBy(*key_cols, bucket).agg(
+    return partials.groupBy(
+        *key_cols, time_bucket_ms("bucket_ts", coarser_ms)
+    ).agg(
         F.hll_sketch_estimate(F.hll_union_agg("hll")).alias("approx_distinct")
     )
 
@@ -156,12 +179,7 @@ def _partial_specs(distinct_col: str | None = None):
         "classic": (
             rollup_partials,
             (),
-            [
-                F.sum("n").alias("n"),
-                F.sum("vsum").alias("vsum"),
-                F.min("vmin").alias("vmin"),
-                F.max("vmax").alias("vmax"),
-            ],
+            merge_partial_aggs(),
         ),
         "ddsketch": (
             lambda pts, level_ms, key_cols, ts_col, value_col: ddsketch_partials(
@@ -289,11 +307,10 @@ def ddsketch_partials(
     map-side-combinable groupBy; per (series, window) the row count is
     bounded by the value range's bucket span (~hundreds), independent
     of the point count, so the partial table is tiny next to raw."""
-    bucket = (F.col(ts_col) - F.col(ts_col) % F.lit(level_ms)).alias("bucket_ts")
     sign, idx = _dd_bucket(value_col, gamma)
     return (
         points.filter(F.col(value_col).isNotNull())
-        .groupBy(*key_cols, bucket, sign, idx)
+        .groupBy(*key_cols, time_bucket_ms(ts_col, level_ms), sign, idx)
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
@@ -322,9 +339,7 @@ def ddsketch_quantile(
         raise ValueError(f"window {window_ms} not a multiple of {level_ms}")
     from pyspark.sql import Window
 
-    bucket = (
-        F.col("bucket_ts") - F.col("bucket_ts") % F.lit(window_ms)
-    ).alias("bucket_ts")
+    bucket = time_bucket_ms("bucket_ts", window_ms)
     merged = partials.groupBy(*key_cols, bucket, "dd_sign", "dd_idx").agg(
         F.sum("cnt").alias("cnt")
     )

@@ -1,4 +1,6 @@
-"""Compile a QueryRequest into a DataFrame plan.
+"""Compile a QueryRequest into a DataFrame plan over one of two inputs:
+raw points (:func:`run_query`) or per-series rollup partials
+(:func:`series_partials`, :func:`run_rollup_query`).
 
 Pipeline per SubQuery, mirroring the reference's iterator stack order
 (DataStore.java:711-745: TagFilter(100) -> Rate(499) -> Downsample(500)
@@ -8,7 +10,6 @@ Pipeline per SubQuery, mirroring the reference's iterator stack order
          -> [rate]
          -> downsample (per-series buckets)
          -> cross-series combine on the projected tag keys
-         -> orderBy(bucket_ts)
 
 All filters are plain Column predicates so Catalyst pushes them into the
 Parquet scan (the analogue of the reference's hour-range planning
@@ -27,19 +28,27 @@ Semantics notes:
   count counts points, not series) while saving a shuffle.
 - ``start`` is floored to the downsample period before bucketing
   (DataStore.java:693-695).
+- Over rollup partials the answer is the same, or ``ValueError`` when
+  partials cannot give it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.time import query_aligned_bucket, time_bucket_ms
 from ..functions.viz import viz_filter
 from ..model import projected_tags, series_id
-from ..operators.aggregators import agg_expr
 from ..operators.downsample import combine_series, downsample
 from ..operators.rate import rate
-from ..parse import is_tag_regex
+from ..operators.rollup import (
+    PARTIAL_AGGREGATORS,
+    merge_partial_aggs,
+    partial_aggs,
+    partial_value,
+)
+from ..parse import DownsampleSpec, is_tag_regex
 from .request import QueryRequest, SubQuery
 
 
@@ -59,6 +68,17 @@ def encode_tsuid(series: str) -> str:
     return series.encode("utf-8").hex()
 
 
+def tag_value_matches(col: Column, v: str) -> Column:
+    """Whether tag value ``col`` matches the queried value ``v``: a
+    wildcard matches any value, a regex must match the whole value
+    (Java ``Matcher.matches()``), anything else matches literally."""
+    if v == "*" or v == ".*":
+        return col.isNotNull()
+    if is_tag_regex(v):
+        return col.rlike(f"^(?:{v})$")
+    return col == v
+
+
 def _tag_predicates(df: DataFrame, tags: dict[str, str]) -> DataFrame:
     for k, v in tags.items():
         # prefer a promoted tag_<k> column (sources/store.with_promoted_tags):
@@ -66,13 +86,33 @@ def _tag_predicates(df: DataFrame, tags: dict[str, str]) -> DataFrame:
         # stats, which a tags-map access never can
         pc = f"tag_{k}"
         col = F.col(pc) if pc in df.columns else F.col("tags").getItem(k)
-        if v == "*" or v == ".*":
-            df = df.filter(col.isNotNull())
-        elif is_tag_regex(v):
-            df = df.filter(col.rlike(f"^(?:{v})$"))  # Matcher.matches() semantics
-        else:
-            df = df.filter(col == v)
+        df = df.filter(tag_value_matches(col, v))
     return df
+
+
+def _floor_start(start_ms: int, spec: DownsampleSpec | None) -> int:
+    """Floor the query start to the bucket period (DataStore.java:693-695)."""
+    return start_ms - start_ms % spec.period_ms if spec else start_ms
+
+
+def catalog_has_tags(meta: DataFrame, q: SubQuery) -> bool:
+    """True iff the meta catalog holds a series matching the SubQuery's
+    metric + tag predicates. The reference's "No matching tags" check
+    consults the META table, not the query result (DataStore.java:
+    938-941): a matching-tags query over an empty time window is a
+    valid 200/empty response, never a 400."""
+    if q.tsuids:
+        return True  # tsuid SubQueries name series directly, no tag check
+    base = meta.filter(F.col("metric") == q.metric)
+    if not base.limit(1).take(1):
+        return False  # unknown metric
+    for k, v in {**q.tags, **q.filters}.items():
+        m = base.filter(F.col("tag_key") == k).filter(
+            tag_value_matches(F.col("tag_value"), v)
+        )
+        if not m.limit(1).take(1):
+            return False
+    return True
 
 
 def build_subquery(
@@ -91,9 +131,7 @@ def build_subquery(
     reconstruct its directory bucket so partition pruning survives the
     bucketed layout a >100k-metric deployment needs."""
     spec = q.downsample_spec()
-    period = spec.period_ms if spec else 1
-    # floor the query start to the bucket period (DataStore.java:693-695)
-    start_ms = start_ms - (start_ms % period) if period > 1 else start_ms
+    start_ms = _floor_start(start_ms, spec)
 
     if q.tsuids:
         # tsuid SubQuery (GET ?tsuid=agg:id,.. — QueryRequest.java:615-627):
@@ -173,25 +211,14 @@ def build_subquery(
             "value",
         )
 
-    if spec is None or spec.aggregator == "none" or spec.aggregator == q.aggregator:
+    if spec is None or spec.aggregator in ("none", q.aggregator):
         # single-shuffle path: one aggregation over (projected tags, bucket)
-        agg_name = q.aggregator
-        projected = projected_tags(group_keys)
         if spec is None or spec.aggregator == "none":
             bucket = F.col("ts")
         else:
-            off = F.col("ts") - F.lit(start_ms)
-            bucket = F.lit(start_ms) + (off - (off % F.lit(spec.period_ms)))
-        pre = df.withColumn("tags", projected).withColumn("bucket_ts", bucket)
-        pre = pre.withColumn("__gkey", series_id())
-        return (
-            pre.groupBy("__gkey", "bucket_ts")
-            .agg(
-                F.first("metric").alias("metric"),
-                F.first("tags").alias("tags"),
-                agg_expr(agg_name).alias("value"),
-            )
-            .select("metric", "tags", "bucket_ts", "value")
+            bucket = query_aligned_bucket("ts", start_ms, spec.period_ms)
+        return combine_series(
+            df.withColumn("bucket_ts", bucket), group_keys, q.aggregator
         )
 
     # two-stage path: downsample agg differs from the cross-series agg.
@@ -226,5 +253,85 @@ def run_query(
             viz_exprs=viz_exprs,
             bucket_metrics=bucket_metrics,
         )
+        for q in request.queries
+    ]
+
+
+def series_partials(points: DataFrame, level_ms: int) -> DataFrame:
+    """Classic partials per series at ``level_ms``: (metric, __series,
+    bucket_ts, tags, n, vsum, vmin, vmax) — the input of
+    :func:`run_rollup_query`."""
+    return (
+        points.withColumn("__series", series_id())
+        .groupBy("metric", "__series", time_bucket_ms("ts", level_ms))
+        .agg(F.first("tags").alias("tags"), *partial_aggs())
+    )
+
+
+def build_rollup_subquery(
+    partials: DataFrame,
+    q: SubQuery,
+    start_ms: int,
+    end_ms: int,
+    level_ms: int,
+) -> DataFrame:
+    """:func:`build_subquery`'s answer, merged from
+    :func:`series_partials` at ``level_ms``."""
+    spec = q.downsample_spec()
+    if (
+        q.rate
+        or q.tsuids
+        or spec is None
+        or spec.period_ms % level_ms != 0
+        or spec.aggregator not in PARTIAL_AGGREGATORS
+        or q.aggregator not in PARTIAL_AGGREGATORS
+    ):
+        raise ValueError(
+            f"SubQuery not rollup-eligible (metric={q.metric!r}); use query()"
+        )
+    if (end_ms + 1) % level_ms != 0:
+        # partials cannot cut inside a level bucket: an unaligned end
+        # would silently include points past it (the raw path filters
+        # ts <= end exactly)
+        raise ValueError(
+            f"SubQuery not rollup-eligible: end={end_ms} does not "
+            f"align to the level boundary (end = k*{level_ms} - 1); "
+            "use query()"
+        )
+    start_ms = _floor_start(start_ms, spec)
+    df = partials.filter(F.col("metric") == q.metric).filter(
+        (F.col("bucket_ts") >= start_ms) & (F.col("bucket_ts") <= end_ms)
+    )
+    df = _tag_predicates(df, q.tags)
+    df = _tag_predicates(df, q.filters)
+    df = df.withColumn(
+        "bucket_ts", query_aligned_bucket("bucket_ts", start_ms, spec.period_ms)
+    )
+    group_keys = sorted(q.tags.keys())
+    if spec.aggregator == q.aggregator:
+        # the single-aggregation collapse: partials merge over ALL series
+        # of a (projected tags, bucket), so avg is the weighted average
+        # and count counts points, exactly as on raw points
+        df = df.withColumn("tags", projected_tags(group_keys)).withColumn(
+            "__series", series_id()
+        )
+    ds = df.groupBy("__series", "bucket_ts").agg(
+        F.first("metric").alias("metric"),
+        F.first("tags").alias("tags"),
+        *merge_partial_aggs(),
+    ).select(
+        "metric", "tags", "bucket_ts", partial_value(spec.aggregator).alias("value")
+    )
+    if spec.aggregator == q.aggregator:
+        return ds
+    return combine_series(ds, group_keys, q.aggregator)
+
+
+def run_rollup_query(
+    partials: DataFrame, request: QueryRequest, level_ms: int
+) -> list[DataFrame]:
+    """:func:`run_query` over :func:`series_partials` at ``level_ms``."""
+    return [
+        build_rollup_subquery(partials, q, request.start, request.end, level_ms)
         for q in request.queries
     ]

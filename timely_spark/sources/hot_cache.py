@@ -45,18 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _canonical_tags(col: str = "tags"):
-    """Order-independent rendering of the tag map — the unique-tag-set
-    KEY (the reference counts TreeMap-sorted tag strings; map_entries
-    order is storage-dependent, so sort before joining)."""
-    return F.array_join(
-        F.transform(
-            F.array_sort(F.map_entries(F.col(col))),
-            lambda e: F.concat(e["key"], F.lit("="), e["value"]),
-        ),
-        ",",
-    )
+from ..model import sorted_tag_line
 
 
 class HotCache:
@@ -132,7 +121,8 @@ class HotCache:
             over = (
                 fresh.groupBy("metric")
                 .agg(
-                    F.countDistinct(_canonical_tags()).alias("__n_tagsets")
+                    # the reference counts TreeMap-sorted tag strings
+                    F.countDistinct(sorted_tag_line(sep=",")).alias("__n_tagsets")
                 )
                 .filter(F.col("__n_tagsets") > self.max_unique_tag_sets)
                 .collect()

@@ -204,9 +204,9 @@ class SubscriptionManager:
             self._on_complete(subscription_id, metric)
 
     def _store_schema(self):
-        import os
+        from ..fsutil import path_exists
 
-        if os.path.isdir(self.store_path):
+        if path_exists(self.spark, self.store_path):
             try:
                 return self.spark.read.parquet(self.store_path).schema
             except Exception:

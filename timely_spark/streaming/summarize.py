@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.time import time_bucket_ms
 from ..model import series_id
 
 SUMMARY_PERCENTILES = [0.5, 0.75, 0.9, 0.99]  # MetricHistogram.java:123-167
@@ -77,7 +78,7 @@ def summarize_batch(points: DataFrame, window_ms: int, exact: bool = True) -> Da
     hundred M points/bucket); ``exact=False`` switches to
     ``percentile_approx`` — the 100 TB path where buckets are huge.
     """
-    bucket = (F.col("ts") - (F.col("ts") % F.lit(window_ms))).alias("bucket_ts")
+    bucket = time_bucket_ms("ts", window_ms)
     out = (
         points.withColumn("bucket_ts", bucket)
         .withColumn("__series", series_id())
